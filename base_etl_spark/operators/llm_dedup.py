@@ -289,16 +289,17 @@ def bucket_pairs(
     pre-collapse (dedup_near_minhash) removes the identical-text cause;
     what remains above the cap is reported, not exploded. cap=None
     disables the guard (property tests compare against naive all-pairs)."""
-    # r12 (guide §2.3 — narrower shuffle keys): the bucket exchange keys
-    # on ONE 64-bit fuse of (band, bh) instead of the (int, long) pair —
-    # 20 % fewer key bytes per row and single-column hashing. Bucket
-    # identity changes only on a cross-band xxhash64 collision
-    # (P ~ 2^-64 per bucket pair); a collision can only MERGE two
-    # buckets, i.e. add candidates, and every candidate is exact-verified
-    # downstream, so the declared outputs are unchanged (re-proven vs
-    # the exact-Jaccard oracle at 3 SFs). bucket_overflow and
-    # dedup_bucket_stats keep the explicit (band, bh) grain — they
-    # REPORT buckets per band and never shuffle doc-pair volumes.
+    # The bucket exchange keys on ONE 64-bit fuse of (band, bh) instead
+    # of the (int, long) pair: 20 % fewer key bytes per row and
+    # single-column hashing. Bucket identity differs from (band, bh) only
+    # on a cross-band xxhash64 collision (P ~ 2^-64 per bucket pair),
+    # which MERGES two buckets. A merged bucket within the cap only adds
+    # candidates, and every candidate is exact-verified downstream. But
+    # a merge can also turn two under-cap buckets into one over-cap
+    # bucket, which the cap then skips, losing both buckets' pairs.
+    # lsh_bucket_overflow counts that skip (it is taken on the fused
+    # key); bucket_overflow and dedup_bucket_stats report at the
+    # (band, bh) grain and so would not show it.
     buckets = (
         banded.groupBy(F.xxhash64("band", "bh").alias("bkey"))
         # collect_set, not collect_list: a duplicate (id, band, bh) row
@@ -448,22 +449,17 @@ def dedup_near_minhash(t: Tables) -> DataFrame:
     path."""
     # No persists, no self-joins: the signature lineage runs exactly once
     # (bucket-collect candidate generation, see lsh_candidate_pairs), so
-    # there is nothing to cache. Round 1 persisted two mid-plan
-    # intermediates and still paid for double lineage evaluation plus
-    # AQE/cache contention (6.6 s at sf0.1; this shape runs ~3 s).
+    # there is nothing to cache; persisting mid-plan intermediates would
+    # only add AQE/cache contention.
     # Verification (shared _verify_candidates): merge-pinned single-scan
     # shingle membership join — see the helper's docstring for the
     # measured broadcast-OOM and shuffle_hash-stall history.
-    # The gate scalar is recomputed on EVERY call (r11: an earlier
-    # draft memoized it on the session-cached documents frame, which
-    # let warm bench attempts skip a real ~0.6 s scan — cross-run
-    # result caching, removed). The read is a PRUNED projection: the
-    # gate only needs per-chash counts, so it scans text alone (no
-    # doc_id, no min-rep agg) — the scan job the collapse decision
-    # fundamentally requires and nothing more.
-    # r11 drift triage: the r6 anchor (2.23 s) predates this gate; the
-    # isolated quiet-box key is 2.68 s (1.20x) and the in-bench excess
-    # to ~4 s is long-session JVM state, not plan regression.
+    # The gate scalar is recomputed on EVERY call, with no caching across
+    # runs: memoizing it on the session-cached documents frame would let
+    # warm bench attempts skip a real ~0.6 s scan. The read is a PRUNED
+    # projection: the gate only needs per-chash counts, so it scans text
+    # alone (no doc_id, no min-rep agg) — the scan job the collapse
+    # decision fundamentally requires and nothing more.
     docs = t.documents
     tagged, classes = exact_dup_classes(docs)
     max_class = (
@@ -597,46 +593,38 @@ def _propagate_min_labels(
     pairs: DataFrame, max_rounds: int | None = None, what: str = "min-label propagation"
 ) -> DataFrame:
     """(node, lab) min-label propagation over an undirected pair graph:
-    each round every node adopts the minimum label among itself and its
-    neighbors; converges in O(component diameter) rounds. ONE join +
-    one groupBy + one action per round: the moved flag rides inside the
-    checkpointed frame, so convergence is a cheap sum over the already-
-    materialized blocks instead of a second label-vs-label join per
-    round (r10 quality_survivor shave — the old shape paid two jobs a
-    round). localCheckpoint per round keeps lineage flat; the round cap
-    is a runaway guard that RAISES instead of returning non-converged
-    labels — and it is sized from the DATA (r9 ADVICE, same fix as
-    graph_k_core): component diameter is at most node_count - 1, so
-    max(100, node_count) can never spuriously raise on a chain-shaped
-    graph the way a fixed constant would.
+    each hop every node adopts the minimum label among itself and its
+    neighbors; converges in O(component diameter) hops.
 
-    r11 (guide §1.2 — fewer driver round-trips): the per-round
-    checkpoint is LAZY (eager=False), so the convergence read is the
-    job that materializes the round — ONE Spark job per round instead
-    of the eager checkpoint job + the convergence job. (The seed label
-    frame stays eager: round 1's plan references it twice — via neigh
-    and directly — and an unmaterialized lazy-checkpoint RDD scanned
-    by two concurrent stages would be computed twice.) The data-sized
-    cap's node count is likewise deferred: labels carries every node
-    in every round, so the count is only read — from the cached frame —
-    if round 100 is ever reached, and graphs that converge earlier
-    (all fixtures) never pay that job.
+    Each round applies TWO hops before one convergence read. The frames
+    are tiny (rep-graph nodes, not corpus rows), so a round's cost is
+    driver-latency-bound and two joins in one job cost barely more than
+    one. Results are identical to single hops because min-label
+    propagation is monotone with a unique fixpoint (the component
+    minimum): extra hops can only reach it sooner, and a second hop that
+    moves nothing proves the first hop's output was already the
+    fixpoint. The moved flag rides inside the checkpointed frame, so
+    convergence is a cheap sum over the already-materialized blocks, not
+    a second label-vs-label join. The intermediate hop is NOT
+    checkpointed: both of hop 2's references to it shuffle on the same
+    key, so ReuseExchange evaluates it once.
 
-    r12 (guide §1.2 again — the r11 quality_survivor wobble triage):
-    each round now applies TWO hops before the convergence read. The
-    frames are tiny at every scale that matters here (rep-graph nodes,
-    not corpus rows), so a round's cost is driver-latency-bound, and
-    two joins in one job cost barely more than one — measured rounds
-    at sf0.1: graph_components 6 → 3, collapsed labels 2 → 1 (wall
-    time a wash locally; the job halving is the scale win). Results
-    are IDENTICAL: min-label propagation is monotone with a unique
-    fixpoint (the component minimum), so extra hops can only reach it
-    sooner, and a second hop that moves nothing proves the first hop's
-    output was already the fixpoint. The intermediate hop is NOT
-    checkpointed — both of hop 2's references to it shuffle on the
-    same key, so ReuseExchange evaluates it once. The round cap
-    counts DOUBLE rounds against the node-count bound, which stays a
-    valid diameter bound (two hops cover at least one)."""
+    The per-round localCheckpoint keeps lineage flat and is LAZY
+    (eager=False), so the convergence read is the job that materializes
+    the round: ONE Spark job per round. The seed label frame stays
+    eager: round 1's plan references it twice (via neigh and directly),
+    and an unmaterialized lazy-checkpoint RDD scanned by two concurrent
+    stages would be computed twice.
+
+    The round cap is a runaway guard that RAISES instead of returning
+    non-converged labels. It is sized from the DATA: component diameter
+    is at most node_count - 1, so max(100, node_count) can never
+    spuriously raise on a chain-shaped graph the way a fixed constant
+    would. The cap counts DOUBLE rounds against that bound, which stays
+    a valid diameter bound (two hops cover at least one). The node count
+    is read only if round 100 is reached, off the cached frame (labels
+    carries every node in every round), so graphs that converge earlier
+    never pay that job."""
     edges = (
         pairs.unionByName(
             pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))

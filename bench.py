@@ -310,7 +310,7 @@ HEADLINE = {
     "source_matrix": "dedup_source_matrix",
     "ngram_novelty": "text_ngram_novelty",
     "silhouette": "sim_silhouette_label",
-    # round-9 heavies (r8 VERDICT task 5): the ROUND9_WINDOW shapes
+    # round-9 heavies (r8 VERDICT task 5): the round-9 window shapes
     # most likely to regress now carry falsifiable anchors — BASELINE.md
     # "Local anchors for the round-9 heavies".
     "quality_survivor": "dedup_quality_survivor",

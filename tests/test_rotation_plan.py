@@ -1,139 +1,44 @@
-"""Mechanical guard on the driver-window rotation plan.
-
-The driver hash-verifies only the first 50 keys of queries() iteration
-order per round (registry.py pins that order via DRIVER_PRIORITY), so a
-stale or overlapping window silently burns a whole round's verification
-budget re-proving known-green keys — the r4 VERDICT called this the
-single biggest per-round risk. These tests re-derive the rotation
-arithmetic from the committed CORRECTNESS_r0*.json driver records every
-pytest run: the planned round-6/7 windows must stay a clean partition of
-the not-yet-driver-verified registry keys, and any key added or renamed
-after the plan was computed fails the partition check loudly instead of
-sliding into an un-planned slot.
-"""
+"""The driver hash-verifies only the first 50 keys of queries() order.
+That prefix, base_etl_spark/driver_order.py, is generated by
+tools/driver_order.py from the committed CORRECTNESS_r*.json rows."""
 
 from __future__ import annotations
 
-import glob
-import json
 import os
+import sys
 
 from base_etl_spark import queries
-from base_etl_spark.registry import (
-    DRIVER_PRIORITY,
-    ROUND6_WINDOW,
-    ROUND7_WINDOW,
-    ROUND8_WINDOW,
-    ROUND9_WINDOW,
-    ROUND10_NEW,
-    ROUND10_PAD,
-    ROUND10_RECHECK,
-    ROUND11_NEW,
-    ROUND11_PAD,
-    ROUND11_RECHECK,
-    ROUND12_NEW,
-    ROUND12_PAD,
-    ROUND12_RECHECK,
-)
+from base_etl_spark.driver_order import DRIVER_PRIORITY
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(_REPO, "tools"))
+import driver_order  # noqa: E402
 
+sys.path.pop(0)
 ALL_KEYS = set(queries())
-# The window the driver will actually snapshot this round.
-CURRENT_WINDOW = list(queries())[:50]
 
 
-def _driver_union() -> set[str]:
-    """Every key with a driver CORRECTNESS row in any completed round."""
-    seen: set[str] = set()
-    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
-        with open(path) as f:
-            seen.update(json.load(f))
-    return seen
+def test_driver_priority_matches_recomputation():
+    assert DRIVER_PRIORITY == driver_order.compute(), "run tools/driver_order.py"
 
 
-def test_current_window_is_listed_and_exact():
-    # Every DRIVER_PRIORITY key must exist (a rename would silently let
-    # registration-order keys slide into the window). The priority list
-    # may hold fewer than 50 keys in the final round — then the window's
-    # prefix must still be exactly the listed keys, in order.
-    missing = [k for k in DRIVER_PRIORITY if k not in ALL_KEYS]
-    assert not missing, f"DRIVER_PRIORITY names unknown keys: {missing}"
-    prefix = DRIVER_PRIORITY[:50]
-    assert CURRENT_WINDOW[: len(prefix)] == prefix
+def test_window_leads_with_driver_priority():
+    assert list(queries())[: len(DRIVER_PRIORITY)] == DRIVER_PRIORITY
 
 
-def test_current_window_buys_only_new_or_declared_rows():
-    # The window must not ACCIDENTALLY re-check keys the driver already
-    # verified in a prior round. After round 9 the driver union covers
-    # the whole registry, so deliberate re-checks are the plan — but
-    # only the DECLARED ones: ROUND10_RECHECK (implementation changed
-    # post-row) and ROUND10_PAD (oldest-evidence refresh). Anything else
-    # overlapping a prior round is rotation drift and fails here.
-    prior = set()
-    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
-        with open(path) as f:
-            keys = set(json.load(f))
-        if keys == set(CURRENT_WINDOW):
-            continue
-        prior |= keys
-    declared = set(ROUND12_RECHECK) | set(ROUND12_PAD)
-    overlap = prior & set(CURRENT_WINDOW) & set(DRIVER_PRIORITY) - declared
-    assert not overlap, f"window re-checks undeclared keys: {sorted(overlap)}"
-    # and the declared re-checks must genuinely BE re-checks — a new key
-    # hidden in the recheck/pad lists would dodge first-row accounting
-    not_prior = declared - prior
-    assert not not_prior, f"declared re-checks with no prior row: {sorted(not_prior)}"
-    # round-12 NEW keys are first-row claims: they must NOT be prior
-    stale_new = set(ROUND12_NEW) & prior
-    assert not stale_new, f"ROUND12_NEW lists already-verified keys: {sorted(stale_new)}"
-    # the historical round-10/11 declarations stay internally consistent
-    # (RECHECK/PAD were prior rows then, NEW keys now have their rows)
-    assert not (set(ROUND10_RECHECK) | set(ROUND10_PAD) | set(ROUND10_NEW)) - prior
-    assert not (set(ROUND11_RECHECK) | set(ROUND11_PAD) | set(ROUND11_NEW)) - prior
+def test_recheck_keys_are_registered_rechecks():
+    rows = set().union(*driver_order.load_rounds().values())
+    assert not set(driver_order.RECHECK) - ALL_KEYS
+    assert not set(driver_order.RECHECK) - rows
 
 
-def test_round6_window_well_formed():
-    assert len(ROUND6_WINDOW) == 50
-    assert len(set(ROUND6_WINDOW)) == 50, "duplicate keys in ROUND6_WINDOW"
-    missing = [k for k in ROUND6_WINDOW if k not in ALL_KEYS]
-    assert not missing, f"ROUND6_WINDOW names unknown keys: {missing}"
-
-
-def test_future_windows_partition_the_unverified_remainder():
-    """driver-union ∪ current-window ∪ round6 ∪ round7 must cover the
-    registry exactly once each (beyond what's already verified): a key
-    added after the plan was computed, or dropped/renamed, breaks this."""
-    r6, r7, r8 = set(ROUND6_WINDOW), set(ROUND7_WINDOW), set(ROUND8_WINDOW)
-    r9 = set(ROUND9_WINDOW)
-    assert not (r6 & r7), f"round-6/7 overlap: {sorted(r6 & r7)}"
-    assert not (r8 & (r6 | r7)), f"round-8 overlaps earlier windows: {sorted(r8 & (r6 | r7))}"
-    assert not (r9 & (r6 | r7 | r8)), f"round-9 overlaps earlier windows: {sorted(r9 & (r6 | r7 | r8))}"
-    # Disjointness binds only the DELIBERATE part of the live window —
-    # keys actually listed in DRIVER_PRIORITY. Excluded: a 51st hedge
-    # entry beyond the 50-window (may legally lead the next round),
-    # registration-order keys padding a short list out to 50, and — from
-    # round 10 on — DECLARED re-checks (a changed-implementation key may
-    # legitimately sit in a historical window AND the live one). Once a
-    # planned window IS the live window, the overlap is the rotation.
-    declared = (
-        set(ROUND10_RECHECK) | set(ROUND10_PAD)
-        | set(ROUND11_RECHECK) | set(ROUND11_PAD)
-        | set(ROUND12_RECHECK) | set(ROUND12_PAD)
-    )
-    cur = (set(CURRENT_WINDOW) & set(DRIVER_PRIORITY)) - declared
-    if cur != r6:
-        assert not (r6 & cur), f"round-6 re-checks live window: {sorted(r6 & cur)}"
-    if cur != r7:
-        assert not (r7 & cur), f"round-7 re-checks live window: {sorted(r7 & cur)}"
-    covered = _driver_union() | set(CURRENT_WINDOW) | r6 | r7 | r8 | r9
-    unplaced = ALL_KEYS - covered
-    assert not unplaced, (
-        f"keys with no planned driver slot (append to ROUND9_WINDOW): "
-        f"{sorted(unplaced)}"
-    )
-    phantom = (r6 | r7 | r8 | r9) - ALL_KEYS
-    assert not phantom, f"planned windows name unknown keys: {sorted(phantom)}"
+def test_ordering_rule_on_synthetic_rounds():
+    rounds = {1: ["a", "b", "c"], 2: ["d", "a"], 3: ["e", "b"]}
+    keys = ["b", "new2", "a", "c", "e", "d", "new1"]
+    # recheck, never-checked in key order, then by (latest round, position)
+    assert driver_order.driver_order(rounds, keys, recheck=["e"]) == [
+        "e", "new2", "new1", "c", "d", "a", "b",
+    ]
 
 
 def test_survey_family_tables_enumerate_registry():

@@ -20,10 +20,12 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TOOLS = [
     "check.py",
+    "driver_order.py",
     "empty_check.py",
     "exit_gate.py",
     "fuzz_check.py",
     "invariance_check.py",
+    "profile_keys.py",
     "scale_stress.py",
 ]
 

@@ -1,15 +1,15 @@
-"""Round-11 measurement harness (guide §1: measure first).
+"""Per-round measurement harness (measure first).
 
 Times registry keys at $SPARK_GRAFT_SF_DIR (default sf0.1) through the
 noop sink and optionally dumps .explain("formatted") output to
-plans/r11/. Produces the per-operator measured table OPTIMIZATION_r11.md
-is built from.
+plans/r<N>/. Produces the per-operator measured tables the
+OPTIMIZATION_r<N>.md logs are built from.
 
 Usage:
-    python tools/profile_r11.py --keys q1 q3 ...      # bench-name or registry-key
-    python tools/profile_r11.py --all                 # every registry key, 1 run each
-    python tools/profile_r11.py --plans before        # dump headline plans to plans/r11/*_before.txt
-    python tools/profile_r11.py --runs 3              # best-of-N for --keys
+    python tools/profile_keys.py --round 13 --keys q1 q3 ...  # bench-name or registry-key
+    python tools/profile_keys.py --round 13 --all             # every registry key, 1 run each
+    python tools/profile_keys.py --round 13 --plans before    # headline plans to plans/r13/*_before.txt
+    python tools/profile_keys.py --round 13 --runs 3          # best-of-N for --keys
 """
 
 from __future__ import annotations
@@ -26,8 +26,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
+def main() -> int:
     ap = argparse.ArgumentParser()
+    ap.add_argument("--round", type=int, required=True, help="plans/r<N>/ and app name")
     ap.add_argument("--keys", nargs="*", default=[])
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--runs", type=int, default=3)
@@ -39,7 +40,7 @@ def main() -> None:
     from bench import HEADLINE
 
     spark = build_session(
-        "profile_r11", extra_conf={"spark.ui.showConsoleProgress": "false"}
+        f"profile_r{args.round}", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
     spark.sparkContext.setLogLevel("ERROR")
     qs = queries()
@@ -50,19 +51,20 @@ def main() -> None:
             return name, HEADLINE[name]
         return name, name
 
+    plan_dir = os.path.join(REPO, "plans", f"r{args.round}")
     if args.plans:
-        os.makedirs(os.path.join(REPO, "plans", "r11"), exist_ok=True)
+        os.makedirs(plan_dir, exist_ok=True)
         for bname, key in HEADLINE.items():
             df = qs[key](spark, SF_DIR)
             txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            path = os.path.join(REPO, "plans", "r11", f"{bname}_{args.plans}.txt")
+            path = os.path.join(plan_dir, f"{bname}_{args.plans}.txt")
             with open(path, "w") as f:
                 f.write(f"# {bname} ({key}) explain(formatted) @ {SF_DIR}\n")
                 f.write(txt)
             print(f"wrote {path}", file=sys.stderr)
-        return
+        return 0
 
     names = list(HEADLINE) if not (args.keys or args.all) else args.keys
     if args.all:
@@ -93,7 +95,8 @@ def main() -> None:
     if args.out:
         with open(args.out, "w") as f:
             f.write(line + "\n")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
