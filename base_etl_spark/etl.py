@@ -62,12 +62,18 @@ def run_daily_job(
     against embedded Derby). The JDBC leg is replay-idempotent too:
     the logical date's rows are deleted before the append, so re-running
     a backfill date never double-inserts (delete+append ~= partition
-    overwrite for databases). Returns the row count written."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    overwrite for databases). Returns the row count written. The dynamic
+    mode is a per-write option, so the session's own
+    partitionOverwriteMode is left as it was."""
     out = daily_order_summary(spark, sf_dir, day).withColumn(
         "ds", F.date_format("o_orderdate", "yyyy-MM-dd")
     )
-    out.write.mode("overwrite").partitionBy("ds").parquet(out_path)
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ds")
+        .parquet(out_path)
+    )
     if jdbc_url:
         # ANSI-quoted column (Spark's JDBC writer creates case-sensitive
         # lowercase identifiers) + VARCHAR cast (Derby maps StringType to

@@ -590,7 +590,7 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
 
 
 def _propagate_min_labels(
-    pairs: DataFrame, max_rounds: int | None = None, what: str = "min-label propagation"
+    pairs: DataFrame, what: str = "min-label propagation"
 ) -> DataFrame:
     """(node, lab) min-label propagation over an undirected pair graph:
     each hop every node adopts the minimum label among itself and its
@@ -638,18 +638,15 @@ def _propagate_min_labels(
         .select("node", F.col("node").alias("lab"))
         .localCheckpoint()
     )
-    cap = max_rounds if max_rounds is not None else 100
-    cap_is_final = max_rounds is not None
+    cap = None  # max(100, node_count), read once round 100 is reached
     changed = -1
     rnd = 0
-    while True:
-        if rnd >= cap:
-            if cap_is_final:
-                break
-            # diameter <= node_count - 1 bounds the rounds; labels holds
-            # every node each round, so read the count off the cached frame
-            cap = max(100, labels.count())
-            cap_is_final = True
+    while changed != 0:
+        if rnd >= 100:
+            if cap is None:
+                # diameter <= node_count - 1 bounds the rounds; labels holds
+                # every node each round, so read the count off the cached frame
+                cap = max(100, labels.count())
             if rnd >= cap:
                 break
         def _hop(lbl: DataFrame) -> DataFrame:
@@ -671,13 +668,11 @@ def _propagate_min_labels(
         ).first()[0]
         labels = new_labels.select("node", "lab")
         rnd += 1
-        if changed == 0:
-            break
     edges.unpersist()
     iterstats.record(what, rnd)
     if changed != 0:
         raise RuntimeError(
-            f"{what}: did not converge within {max_rounds} rounds — graph has a "
+            f"{what}: did not converge within {cap} rounds — graph has a "
             f"longer chain than expected"
         )
     return labels

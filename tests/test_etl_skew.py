@@ -26,6 +26,8 @@ def test_daily_job_idempotent_overwrite(spark, tmp_path):
     n1 = etl.run_daily_job(spark, SF_TEST, day, out)
     n2 = etl.run_daily_job(spark, SF_TEST, day, out)  # rerun same logical date
     assert n1 == n2 == spark.read.parquet(out).count()
+    # dynamic overwrite is a per-write option; the session keeps its default
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "STATIC"
 
 
 def test_upsert_parquet_merges(spark, tmp_path):
@@ -118,6 +120,10 @@ def test_backfill_run_range_idempotent(spark, tmp_path):
     r1 = etl.run_range(spark, SF_TEST, days, out, run_log_path=log)
     assert all(r["status"] == "success" for r in r1)
     first = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    # each date's write replaced only its own partition
+    written = {r["ds"] for r in r1 if r["rows"] > 0}
+    parts = spark.read.parquet(out).select("ds").distinct().collect()
+    assert len(written) > 1 and {str(r.ds) for r in parts} == written
     # replay the whole range: partition overwrite => identical data
     r2 = etl.run_range(spark, SF_TEST, days, out, run_log_path=log)
     again = sorted(tuple(r) for r in spark.read.parquet(out).collect())

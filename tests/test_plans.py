@@ -3,6 +3,9 @@ defeat Catalyst. These read explain() output, not results."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from base_etl_spark import queries
@@ -633,14 +636,6 @@ def test_triangle_count_prunes_lineitem(spark):
     assert "ReadSchema: struct<l_orderkey:bigint,l_suppkey:bigint>" in plan
 
 
-def test_image_dedup_reads_only_doc_id(spark):
-    """The planted-asset kernel derives content from doc_id; scanning
-    the text column would read ~95% more bytes for nothing."""
-    plan = _plan(_QS["mm_image_dedup"](spark, SF_TEST))
-    assert "ReadSchema: struct<doc_id:bigint>" in plan
-    assert "text" not in plan.split("ReadSchema")[1][:60]
-
-
 def test_survival_pushes_purchase_filter(spark):
     """KM's death leg must reach the parquet reader filtered to
     purchases (it reads ~1/5 of the rows), and no leg may read the
@@ -706,12 +701,26 @@ def test_jaccard_prunes_lineitem_and_broadcasts_degrees(spark):
     assert plan.count("BroadcastHashJoin") >= 3
 
 
-def test_mm_trim_and_scene_cut_read_only_doc_id(spark):
-    """Both media kernels derive content from doc_id; scanning text
-    would read ~95% more bytes for nothing."""
-    for key in ("mm_audio_silence_trim", "mm_video_scene_cut"):
-        plan = _plan(_QS[key](spark, SF_TEST))
-        assert "ReadSchema: struct<doc_id:bigint>" in plan, key
+_MM_DOC_ID_KERNELS = [
+    "mm_audio_decode", "mm_audio_frame_energy", "mm_audio_gain_normalize",
+    "mm_audio_resample", "mm_audio_silence_trim", "mm_audio_spectral_centroid",
+    "mm_image_crop_center", "mm_image_decode", "mm_image_dedup",
+    "mm_image_neardup", "mm_image_phash", "mm_image_png_decode",
+    "mm_image_quality_stats", "mm_image_resize", "mm_video_fps_downsample",
+    "mm_video_frame_dedup", "mm_video_frames", "mm_video_scene_cut",
+]
+
+
+@pytest.mark.parametrize("key", _MM_DOC_ID_KERNELS)
+def test_mm_kernel_reads_only_doc_id(spark, key):
+    """Every planted-media kernel derives its payload from doc_id alone:
+    the scan reads doc_id only (text would be ~95% more bytes for
+    nothing), and the rows reach the Python stage spread by one
+    doc_id-hash exchange."""
+    plan = _plan(_QS[key](spark, SF_TEST))
+    scans = re.findall(r"ReadSchema: (\S+)", plan)
+    assert scans and set(scans) == {"struct<doc_id:bigint>"}, scans
+    assert "hashpartitioning(doc_id" in plan
 
 
 def test_url_dedup_reads_only_doc_id_one_shuffle(spark):
