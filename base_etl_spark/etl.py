@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from base_etl_spark.functions import money
-from base_etl_spark.io import Tables, load_tables
+from base_etl_spark.io import Tables, load_tables, local_frame
 from base_etl_spark.registry import query
 from base_etl_spark import sinks
 
@@ -64,9 +64,19 @@ def run_daily_job(
     a backfill date never double-inserts (delete+append ~= partition
     overwrite for databases). Returns the row count written. The dynamic
     mode is a per-write option, so the session's own
-    partitionOverwriteMode is left as it was."""
-    out = daily_order_summary(spark, sf_dir, day).withColumn(
-        "ds", F.date_format("o_orderdate", "yyyy-MM-dd")
+    partitionOverwriteMode is left as it was.
+
+    The day's summary is computed once: an eager `localCheckpoint()`
+    materializes it, and the parquet write, the JDBC append and the
+    returned count all read that one result instead of each re-running
+    the join. The checkpoint keeps the partitioning AQE settled on (one
+    partition for a day's rows, so one file per `ds=` directory);
+    `persist()` would keep the plan's shuffle partitions and write one
+    file per shuffle partition."""
+    out = (
+        daily_order_summary(spark, sf_dir, day)
+        .withColumn("ds", F.date_format("o_orderdate", "yyyy-MM-dd"))
+        .localCheckpoint()
     )
     (
         out.write.mode("overwrite")
@@ -133,7 +143,7 @@ def run_range(
         }
         results.append(rec)
         if run_log_path:
-            spark.createDataFrame([rec], schema=_RUN_LOG_SCHEMA).write.mode(
+            local_frame(spark, [tuple(rec.values())], _RUN_LOG_SCHEMA).write.mode(
                 "append"
             ).parquet(run_log_path)
     return results

@@ -17,9 +17,11 @@ import os
 import weakref
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, LongType
 
 from base_etl_spark import schemas
 
@@ -142,3 +144,21 @@ def events_between(spark: SparkSession, sf_dir: str, start_us: int, end_us: int)
         (F.col("ts") >= F.timestamp_micros(F.lit(start_us)))
         & (F.col("ts") < F.timestamp_micros(F.lit(end_us)))
     )
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A frame over rows the driver already holds (tuples in the field
+    order of the DDL `schema`), built as an Arrow table so it plans as a
+    one-task `LocalTableScan`. A Python list passed to `createDataFrame`
+    plans as `Scan ExistingRDD` instead: one task per default partition,
+    each in a Python worker. An empty `rows` keeps the schema.
+
+    Timestamp columns are out of scope: Arrow reads a naive datetime as
+    UTC where Spark's row path reads it as JVM-local time. Pass epoch
+    micros as `bigint` and rebuild with `F.timestamp_micros`."""
+    struct = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow_schema.names, r)) for r in rows], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, struct)

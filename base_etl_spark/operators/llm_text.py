@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from base_etl_spark.io import Tables
+from base_etl_spark.io import Tables, local_frame
 from base_etl_spark.registry import query
 
 # tiny English stopword list used by langid / quality scoring; keep in
@@ -1471,8 +1471,8 @@ def tokenizer_bpe_train(t: Tables) -> DataFrame:
     merges, _, rounds = _bpe_train(t.documents)
     iterstats.record("tokenizer_bpe_train", rounds)
 
-    return spark.createDataFrame(
-        merges,
+    return local_frame(
+        spark, merges,
         "merge_rank int, left_sym string, right_sym string,"
         " merged string, pair_count bigint",
     )

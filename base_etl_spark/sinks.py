@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 
 from base_etl_spark import schemas
-from base_etl_spark.io import Tables
+from base_etl_spark.io import Tables, local_frame
 from base_etl_spark.registry import query
 
 
@@ -84,9 +84,11 @@ def build_jdbc_writer(
 ) -> DataFrameWriter:
     """Assemble (without executing) the JDBC batch sink: the reference
     class's 'DataFrame batch transformations + JDBC sink' target
-    (BASELINE.json:7). numPartitions bounds concurrent connections;
-    batchsize amortizes round trips. Caller runs .save()."""
-    df = df.repartition(num_partitions)
+    (BASELINE.json:7). numPartitions bounds concurrent connections:
+    Spark's JDBC writer coalesces a frame with more partitions down to
+    it, and writes a frame with fewer over its own partitions, so no
+    shuffle is added. batchsize amortizes round trips. Caller runs
+    .save()."""
     w = (
         df.write.mode(mode)
         .format("jdbc")
@@ -815,7 +817,7 @@ def scan_csv_permissive(t: Tables) -> DataFrame:
     # drops the absent group, e.g. a source file of only corrupt lines).
     # Left join against the static two-value domain; no-op when both
     # groups occur.
-    domain = t.spark.createDataFrame([(False,), (True,)], "is_corrupt boolean")
+    domain = local_frame(t.spark, [(False,), (True,)], "is_corrupt boolean")
     return domain.join(grouped, "is_corrupt", "left").select(
         "is_corrupt", F.coalesce("n_rows", F.lit(0).cast("long")).alias("n_rows")
     )
@@ -1183,8 +1185,8 @@ def scan_json_permissive(t: Tables) -> DataFrame:
         F.round(F.sum("c_acctbal"), 2).alias("sum_acctbal"),
     )
     # all three classes are load-bearing even at count 0 (empty tier)
-    domain = t.spark.createDataFrame(
-        [("good",), ("partial",), ("syntax",)], "row_class string"
+    domain = local_frame(
+        t.spark, [("good",), ("partial",), ("syntax",)], "row_class string"
     )
     return domain.join(grouped, "row_class", "left").select(
         "row_class",
@@ -1293,11 +1295,9 @@ def etl_zorder_cluster(t: Tables) -> DataFrame:
 )
 def sink_ledger_census(t: Tables) -> DataFrame:
     """Read-back census over the EXACTLY-ONCE ledger sink's published
-    epoch table (r10 VERDICT task 6a): puts make_ledger_append_sink
-    under the driver's hash gate the same way scan_python_datasource
-    certified the DataSource read path — the sink graduates from an
-    S-surface (pytest-only) to a D key whose correctness IS the
-    exactly-once property.
+    epoch table: puts make_ledger_append_sink under the oracle hash
+    gate the same way scan_python_datasource covers the DataSource read
+    path, so the key's correctness IS the exactly-once property.
 
     Pipeline, executed live on every call (never cached — the property
     under test is the write path):
@@ -1317,9 +1317,11 @@ def sink_ledger_census(t: Tables) -> DataFrame:
        row landed in EXACTLY one published epoch — duplicated batches
        overshoot n_events, vanished batches undershoot.
 
-    The returned frame is rebuilt via createDataFrame from the collected
-    census (bounded: one row per event type) so the temp dirs can be
-    deleted eagerly instead of leaking until the driver materializes.
+    The census is collected (bounded: one row per event type) so the
+    temp dirs can be deleted eagerly, and the returned frame is a local
+    frame over those rows (`io.local_frame`, one LocalTableScan task).
+    min/max ts travel through Python as epoch micros and are rebuilt
+    with `timestamp_micros`, so no naive datetime crosses the boundary.
 
     Scale: the per-epoch facts are map-side-combined aggregates of one
     micro-batch (census cardinality = event types, not rows); the
@@ -1386,8 +1388,8 @@ def sink_ledger_census(t: Tables) -> DataFrame:
                 .groupBy("event_type")
                 .agg(
                     F.sum("n_events").cast("long").alias("n_events"),
-                    F.min("min_ts").alias("min_ts"),
-                    F.max("max_ts").alias("max_ts"),
+                    F.unix_micros(F.min("min_ts")).alias("min_us"),
+                    F.unix_micros(F.max("max_ts")).alias("max_us"),
                 )
                 .collect()
             )
@@ -1395,6 +1397,11 @@ def sink_ledger_census(t: Tables) -> DataFrame:
             rows = []
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, n_events bigint, min_ts timestamp, max_ts timestamp"
+    return local_frame(
+        spark, rows, "event_type string, n_events bigint, min_us bigint, max_us bigint"
+    ).select(
+        "event_type",
+        "n_events",
+        F.timestamp_micros("min_us").alias("min_ts"),
+        F.timestamp_micros("max_us").alias("max_ts"),
     )

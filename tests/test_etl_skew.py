@@ -5,6 +5,7 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from base_etl_spark import etl, skew
 from tests.conftest import SF_TEST
@@ -28,6 +29,42 @@ def test_daily_job_idempotent_overwrite(spark, tmp_path):
     assert n1 == n2 == spark.read.parquet(out).count()
     # dynamic overwrite is a per-write option; the session keeps its default
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "STATIC"
+
+
+def test_daily_job_sinks_agree_one_file_per_date(spark, tmp_path):
+    """One computation feeds every sink: the returned count equals the
+    parquet rows and the JDBC rows of each date, and each `ds=`
+    directory holds exactly one file (the checkpoint keeps AQE's
+    coalesced partitioning; a persisted plan writes one file per
+    shuffle partition)."""
+    import glob
+    import os
+    from collections import Counter
+
+    from base_etl_spark import sinks
+
+    url = "jdbc:derby:memory:dailyjob;create=true"
+    derby = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
+    out = str(tmp_path / "daily")
+    days = [dt.date(1995, 6, 17), dt.date(1995, 6, 19)]  # 3 and 5 orders at sf0.001
+    counts = {
+        d.isoformat(): etl.run_daily_job(
+            spark, SF_TEST, d, out, jdbc_url=url, jdbc_properties=derby
+        )
+        for d in days
+    }
+    assert counts == {"1995-06-17": 3, "1995-06-19": 5}
+    parquet = Counter(str(r.ds) for r in spark.read.parquet(out).select("ds").collect())
+    # Derby stores ds as CLOB, which cannot be compared in a pushed-down filter
+    jdbc = Counter(
+        r.ds
+        for r in sinks.read_jdbc(spark, url, "daily_order_summary", properties=derby)
+        .select("ds")
+        .collect()
+    )
+    assert parquet == jdbc == counts
+    for ds in counts:
+        assert len(glob.glob(os.path.join(out, f"ds={ds}", "*.parquet"))) == 1
 
 
 def test_upsert_parquet_merges(spark, tmp_path):
@@ -134,6 +171,11 @@ def test_backfill_run_range_idempotent(spark, tmp_path):
     assert latest.count() == 3
     assert {r.ds for r in latest.collect()} == {d.isoformat() for d in days}
     assert all(r["rows"] == s["rows"] for r, s in zip(r1, r2))
+    # the run log keeps its declared types, null error included
+    assert [(f.name, f.dataType) for f in latest.schema.fields] == [
+        (f.name, f.dataType) for f in DataType.fromDDL(etl._RUN_LOG_SCHEMA).fields
+    ]
+    assert all(r.error is None for r in latest.collect())
 
 
 def test_scd2_apply_versions(spark):
